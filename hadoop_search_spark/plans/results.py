@@ -8,9 +8,14 @@ from a MapFile. Here:
 
 * ranking is ``orderBy(score desc, doc_id asc)`` — distributed
   TakeOrderedAndProject when followed by a limit;
-* a page fetch takes ``limit(page*10)`` (distributed top-k) and
-  row-numbers only that tiny prefix — no global single-partition
-  window, so pagination survives arbitrarily large result sets;
+* serving a page is one Spark action (:func:`top_with_total`): the
+  unranked plan is observed by an exact ``count`` (a CollectMetrics
+  node *below* the top-k, so every result row passes it), ranked by
+  a distributed ``limit(page*10)`` (per-partition heaps + merge), and
+  the page is sliced from that prefix on the driver — the query plan
+  runs once, with no separate count and no global single-partition
+  window. :func:`page_slice` keeps the windowed form for paginations
+  that stay a DataFrame;
 * document fetch is a pushed-down ``doc_id IN (...)`` filter against
   the sorted corpus parquet (row-group pruning — the MapFile
   point-get, S8);
@@ -28,7 +33,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Row, Window
 from pyspark.sql import functions as F
 
 PAGE_SIZE = 10  # SearchResult.java:42
@@ -67,17 +72,35 @@ def page_slice(
     )
 
 
+def top_with_total(results: DataFrame, n: int) -> tuple[int, list[Row]]:
+    """``(exact total, top-n rows)`` of unranked ``(doc_id, score)``
+    results in rank order, from ONE Spark action.
+
+    The count is an observed metric placed below the ranking, so the
+    physical plan is TakeOrderedAndProject over CollectMetrics over
+    the results: every row passes the counter on its way into the
+    per-partition heaps. Observing an already-sorted frame instead
+    would sit the counter above a full range-partitioned Sort.
+
+    The metric is read only after ``collect()`` returned —
+    ``Observation.get`` blocks forever when the action failed."""
+    obs = Observation()
+    rows = rank(results.observe(obs, F.count(F.lit(1)).alias("n"))).limit(n).collect()
+    return obs.get["n"], rows
+
+
 @dataclass
 class SearchResult:
     """Reference parity type: all result ids chunked into pages of 10
-    (`util/SearchResult.java:23-46`). Driver-side — use
-    :func:`page_slice` for the distributed path."""
+    (`util/SearchResult.java:23-46`). Driver-side — :func:`render_page`
+    serves one page without materializing the ids."""
 
     count: int
     pages: list[list[int]]
 
     # driver-side id materialization is capped: the exact total still
-    # comes from a distributed count, but only the first max_ids ids
+    # comes from the observed count of the same top-k action
+    # (:func:`top_with_total`), but only the first max_ids ids
     # (1000 pages) ever reach the driver / the query cache — nobody
     # pages past that, and an unbounded collect would reintroduce the
     # reference's single-reducer materialization this port removes
@@ -86,15 +109,15 @@ class SearchResult:
     @classmethod
     def from_ranked(
         cls,
-        ranked: DataFrame,
+        results: DataFrame,
         page_size: int = PAGE_SIZE,
         max_ids: int = MAX_IDS,
     ) -> "SearchResult":
-        ids = [r.doc_id for r in ranked.select("doc_id").limit(max_ids + 1).collect()]
-        count = len(ids)
-        if count > max_ids:
-            ids = ids[:max_ids]
-            count = ranked.count()  # exact total, ids truncated
+        """``(doc_id, score)`` results — pass them unranked, as
+        ``engine.plan(q)``, so the top-k stays distributed — to the
+        exact total and the first ``max_ids`` ids in rank order."""
+        count, rows = top_with_total(results, max_ids)
+        ids = [r.doc_id for r in rows]
         pages = [ids[i : i + page_size] for i in range(0, len(ids), page_size)]
         return cls(count=count, pages=pages)
 
@@ -255,13 +278,22 @@ def render_page(
     """Full reference query lifecycle step 8 (SURVEY.md §3.1): rank,
     count, fetch the requested page's documents, snippet + highlight.
 
+    The query plan runs once: :func:`top_with_total` returns the exact
+    total with the ranked ``page*10`` prefix, and the page is sliced
+    from it — clamped to the last page like the reference
+    (CorpusFetcher.java:88), which the prefix always holds because
+    ``total < page*10`` whenever the request is past the end. Pages
+    beyond ``SearchResult.MAX_IDS // PAGE_SIZE`` clamp to that page,
+    so a huge ``page`` never ships an unbounded prefix to the driver;
+    the total stays exact. Two Spark actions per request: the ranked
+    prefix and the document fetch.
+
     Returns (total_result_count, [{doc_id, score, snippet}, ...]).
     """
-    ranked = engine.search(query)
-    total = ranked.count()
-    # clamp to the last page like the reference (CorpusFetcher.java:88)
-    last_page = max(1, -(-total // PAGE_SIZE))
-    rows = page_slice(rank(ranked), min(max(page, 1), last_page)).collect()
+    page = min(max(page, 1), SearchResult.MAX_IDS // PAGE_SIZE)
+    total, prefix = top_with_total(engine.plan(query), page * PAGE_SIZE)
+    page = min(page, max(1, -(-total // PAGE_SIZE)))
+    rows = prefix[(page - 1) * PAGE_SIZE : page * PAGE_SIZE]
     words = highlight_words(query)
     docs = {
         r.doc_id: r[text_col]

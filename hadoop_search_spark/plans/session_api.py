@@ -44,8 +44,8 @@ class SearchSession:
             hit = self.cache.get(query)
             if hit is not None:
                 return SearchResult.deserialize(hit)
-        ranked = self.engine.search(query)
-        sr = SearchResult.from_ranked(ranked)
+        # unranked: from_ranked ranks it as a distributed top-k
+        sr = SearchResult.from_ranked(self.engine.plan(query))
         if self.cache is not None:
             self.cache.put(query, sr.serialize())
         return sr

@@ -8,9 +8,9 @@ import sys
 
 import pytest
 
-# every test here drives a subprocess Spark session (60-240 s each) —
-# excluded from the default gate as a module (r13; run with -m "")
-pytestmark = pytest.mark.slow
+# every test here drives subprocess Spark sessions (60-240 s each);
+# all but the index/search/fetch smoke test are marked slow and so
+# excluded from the default gate (run everything with -m "")
 
 CORPUS = "/root/testdata/sf0.001/documents.parquet"
 
@@ -30,6 +30,21 @@ def run_cli(*args, timeout=600):
     )
 
 
+def _brute_force_search(idx, query):
+    """{doc_id: score} for ``query`` over a published index, evaluated
+    without Spark by tests/brute_force.py."""
+    import pyarrow.parquet as pq
+
+    from tests import brute_force as bf
+
+    terms = {}
+    for r in pq.read_table(f"{idx}/postings").to_pylist():
+        terms.setdefault(r["term"], {})[r["doc_id"]] = (r["score"], list(r["positions"]))
+    stopwords = pq.read_table(f"{idx}/stopwords").column("word").to_pylist()
+    universe = set(pq.read_table(CORPUS, columns=["doc_id"]).column("doc_id").to_pylist())
+    return bf.search(query, terms, universe, stopwords=stopwords)
+
+
 def test_cli_index_search_fetch(tmp_path):
     idx = str(tmp_path / "idx")
     r = run_cli("index", "--corpus", CORPUS, "--out", idx, "--stopwords", "2")
@@ -46,6 +61,23 @@ def test_cli_index_search_fetch(tmp_path):
     assert "$RST$" in r.stdout
     assert "FFFF00" in r.stdout  # highlights present
 
+    # a page past the end serves the last page under the same header
+    # (CorpusFetcher.java:88); the rows are checked against the
+    # brute-force evaluator over the published postings
+    want = _brute_force_search(idx, "spark and not dup")
+    total, pages = len(want), -(-len(want) // 10)
+    assert pages > 1
+    assert lines[0] == f"{total}/{pages}"
+    r = run_cli(
+        "search", "spark and not dup", "--page", "999", "--index", idx, "--corpus", CORPUS
+    )
+    assert r.returncode == 0, r.stderr[-500:]
+    header, body = r.stdout.split("\n", 1)
+    assert header == f"{total}/{pages}"
+    got = re.findall(r"^(\d+)\n(\S+)\n.*\$RST\$$", body, re.M)
+    ranked = sorted(want, key=lambda d: (-want[d], d))
+    assert got == [(str(d), f"{want[d]:.3f}") for d in ranked[(pages - 1) * 10 :]]
+
     r = run_cli("fetch", "42", "--corpus", CORPUS)
     assert r.returncode == 0 and len(r.stdout.strip()) > 0
 
@@ -54,6 +86,7 @@ def test_cli_index_search_fetch(tmp_path):
     assert "not found" in r.stderr
 
 
+@pytest.mark.slow
 def test_cli_curate_export(tmp_path, spark):
     out = str(tmp_path / "dataset")
     # permissive thresholds: the tiny-vocab fixture makes most docs
@@ -92,6 +125,7 @@ def test_cli_curate_export(tmp_path, spark):
         assert pos == sorted(pos), f"pos not monotone within {f}"
 
 
+@pytest.mark.slow
 def test_cli_curate_v2_with_benchmark(tmp_path, spark):
     """curate --benchmark routes through the v2 pipeline (Gopher hard
     rules + decontamination): the dataset must exclude every doc the
@@ -129,6 +163,7 @@ def test_cli_curate_v2_with_benchmark(tmp_path, spark):
     assert not (exported & flagged)
 
 
+@pytest.mark.slow
 def test_cli_decontaminate(tmp_path, spark):
     """Both decontaminate paths (direct join and Bloom prefilter)
     must flag the same docs and write the same kept set; the %50
@@ -163,6 +198,7 @@ def test_cli_decontaminate(tmp_path, spark):
     assert len(kept_a) + n_flagged == spark.read.parquet(cand_path).count()
 
 
+@pytest.mark.slow
 def test_cli_stats_report(tmp_path):
     r = run_cli("stats", "--corpus", CORPUS)
     assert r.returncode == 0, r.stderr[-500:]
@@ -172,6 +208,7 @@ def test_cli_stats_report(tmp_path):
     assert re.search(r"exact duplicates: \d+ \([\d.]+%\)", r.stdout)
 
 
+@pytest.mark.slow
 def test_cli_drift(tmp_path, spark):
     """`drift` reports both index layouts (auto-detected) and exits 1
     exactly when a cell flags — the cron-able rebuild trigger."""
@@ -227,6 +264,7 @@ def test_cli_drift(tmp_path, spark):
     assert "DRIFTED" in r4.stdout and "share" in r4.stdout.splitlines()[0]
 
 
+@pytest.mark.slow
 def test_cli_ann_int8_layout(tmp_path):
     """`ann --layout int8`: build the IVF-SQ8 artifact and serve
     stage-1 top-k from it through the CLI (the ivfpq layout is
@@ -244,6 +282,7 @@ def test_cli_ann_int8_layout(tmp_path):
     assert len(lines) == 6 and all("s8=" in ln for ln in lines)
 
 
+@pytest.mark.slow
 def test_cli_ann_residual_opq_encoding(tmp_path):
     """`ann build --encoding residual-opq` (r10): publish the
     rotated-residual IVF-PQ artifact (k-means cells + residual-space
@@ -265,6 +304,7 @@ def test_cli_ann_residual_opq_encoding(tmp_path):
     assert len(lines) == 6 and all("adist9=" in ln for ln in lines)
 
 
+@pytest.mark.slow
 def test_cli_ann_external_query_file(tmp_path):
     """`ann search --queries <parquet>` (r11): a FILE of external
     (query_id, embedding) vectors — the production shape, since the
@@ -297,6 +337,7 @@ def test_cli_ann_external_query_file(tmp_path):
     assert len(lines3) == 6 and all("cosine=" in ln for ln in lines3)
 
 
+@pytest.mark.slow
 def test_cli_ann_graph_refine(tmp_path):
     """`ann graph` publishes the KNN adjacency under the index's
     frozen quantizer; `ann search --refine` expands stage-1 seeds one
@@ -322,6 +363,7 @@ def test_cli_ann_graph_refine(tmp_path):
     assert len(lines) == 6 and all("cosine=" in ln for ln in lines)
 
 
+@pytest.mark.slow
 def test_cli_ann_graph_stale_after_add_degrades_gracefully(tmp_path):
     """Append lifecycle contract: `ann add` leaves {index}/graph
     stale by design (the adjacency is an offline artifact — rebuild

@@ -1,12 +1,15 @@
 """Results layer tests: pagination, SearchResult wire format, snippet,
 NOT-aware highlighting, doc fetch, query cache."""
 
+import threading
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from hadoop_search_spark.plans.cache import QueryCache
 from hadoop_search_spark.plans.results import (
+    PAGE_SIZE,
     SearchResult,
     _ordinal_index_of,
     fetch_docs,
@@ -122,6 +125,115 @@ def test_render_page_end_to_end(spark, documents):
     assert total > 10 and len(rows) == 10
     assert rows[0]["score"] >= rows[-1]["score"]
     assert any("FFFF00" in r["snippet"] for r in rows)
+
+
+@pytest.fixture(scope="module")
+def engine(spark, documents):
+    """Engine over cached postings; ``the`` and ``a`` are stop words
+    at query time only, so an all-stop-word query plans as empty."""
+    from hadoop_search_spark.operators.index import build_postings
+    from hadoop_search_spark.plans.planner import SearchEngine
+
+    postings = build_postings(documents, num_docs=500).cache()
+    postings.count()
+    yield SearchEngine(spark, postings, documents=documents, stopwords=["the", "a"])
+    postings.unpersist()
+
+
+def _two_pass_page(engine, query, page):
+    """Reference for ``render_page``'s rows: the exact total from a
+    ``count`` action, then the windowed page of the clamped page
+    number from a second evaluation of the query plan."""
+    ranked = engine.search(query)
+    total = ranked.count()
+    last_page = max(1, -(-total // PAGE_SIZE))
+    rows = page_slice(rank(ranked), min(max(page, 1), last_page)).collect()
+    return total, [(r.doc_id, r.score) for r in rows]
+
+
+def _render_within(seconds, *args, **kwargs):
+    """``render_page`` on a daemon thread: fails instead of hanging
+    when the observed total never arrives."""
+    out = []
+    t = threading.Thread(
+        target=lambda: out.append(render_page(*args, **kwargs)), daemon=True
+    )
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"render_page did not return in {seconds} s"
+    total, rows = out[0]
+    return total, [(r["doc_id"], r["score"]) for r in rows]
+
+
+@pytest.mark.parametrize(
+    "query,page,want_total",
+    [
+        ("spark and stream", 999, 322),  # past the last page: clamp
+        ("fast and table and dup", 2, 20),  # total a multiple of PAGE_SIZE
+        ("fast and table and dup", 3, 20),  # ... and one page past it
+        ("not spark", 2, 113),  # root negation: complement, score 0
+        ("spark stream", 1, None),  # two-word soft phrase
+        ("the and a", 1, 0),  # all stop words: empty LocalRelation
+        ("the", 5, 0),
+    ],
+)
+def test_render_page_matches_two_pass(engine, documents, query, page, want_total):
+    total, rows = _render_within(300, engine, documents, query, page)
+    assert (total, rows) == _two_pass_page(engine, query, page)
+    if want_total is not None:
+        assert total == want_total
+
+
+def test_render_page_clamps_deep_pages(spark, documents):
+    """Pages past ``MAX_IDS // PAGE_SIZE`` serve that page; the total
+    stays exact."""
+
+    class RangeEngine:  # 10,050 results, doc i ranked i-th
+        def plan(self, query):
+            return spark.range(1, 10_051).select(
+                F.col("id").alias("doc_id"), (1.0 / F.col("id")).alias("score")
+            )
+
+    cap = SearchResult.MAX_IDS // PAGE_SIZE
+    assert cap == 1_000
+    for page in (cap, cap + 1, 10**9):
+        total, rows = _render_within(300, RangeEngine(), documents, "q", page)
+        assert total == 10_050
+        assert [d for d, _ in rows] == list(range(9_991, 10_001))
+
+
+def _job_count(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is fed async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_render_page_runs_the_query_plan_once(spark, engine, documents):
+    """A served page costs the jobs of the bare top-k ``collect()``
+    plus the one ``fetch_docs`` job — no ``count`` action, no second
+    evaluation of the query plan."""
+    q, page = "spark and stream", 3
+    engine.plan(q)  # warm the engine's one-time vocabulary collect
+    rows = []
+    topk = _job_count(
+        spark, "shape-topk",
+        lambda: rows.extend(rank(engine.plan(q)).limit(page * PAGE_SIZE).collect()),
+    )
+    ids = [r.doc_id for r in rows[-PAGE_SIZE:]]
+    fetch = _job_count(
+        spark, "shape-fetch",
+        lambda: fetch_docs(documents, ids).select("doc_id", "text").collect(),
+    )
+    served = _job_count(
+        spark, "shape-render", lambda: render_page(engine, documents, q, page)
+    )
+    assert fetch == 1
+    assert served == topk + fetch
 
 
 def test_query_cache_roundtrip(spark, tmp_path):
